@@ -115,17 +115,19 @@ private[graft] object Materialize {
     * the input has ≥ parallelism splits and spreadScan is a no-op, so
     * the quantum only ever shapes small inputs.
     */
-  // read per-call like graft.spread.width, parsed tolerantly (ADVICE r20:
-  // the object-init bare toLong crashed the first spreadScan caller on a
-  // malformed prop, and a prop set after class load was silently ignored)
   private def spreadQuantumBytes: Long =
-    sys.props.get("graft.spread.quantum").flatMap { v =>
+    positiveProp("graft.spread.quantum").getOrElse(192L * 1024)
+
+  // the spread knobs are read per call, so a prop set after class load
+  // takes effect, and a malformed, zero or negative value warns and falls
+  // back to the default instead of failing the first spreadScan caller
+  private def positiveProp(key: String): Option[Long] =
+    sys.props.get(key).flatMap { v =>
       val parsed = scala.util.Try(v.toLong).toOption.filter(_ > 0)
       if (parsed.isEmpty)
-        System.err.println(
-          s"[materialize] ignoring malformed graft.spread.quantum='$v'; using default")
+        System.err.println(s"[materialize] ignoring malformed $key='$v'; using default")
       parsed
-    }.getOrElse(192L * 1024)
+    }
 
   /** `workFactor` scales the size-derived width for projections whose
     * per-byte cost is far above a plain scan's (md5-per-gram passes do
@@ -136,8 +138,8 @@ private[graft] object Materialize {
   def spreadScan(df: DataFrame, workFactor: Int = 1): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     // width override seam (r20 width sweep) > size-derived width
-    val width = sys.props.get("graft.spread.width")
-      .map(w => math.max(1, math.min(par, w.toInt)))
+    val width = positiveProp("graft.spread.width")
+      .map(w => math.min(par.toLong, w).toInt)
       .getOrElse {
         val quantum = spreadQuantumBytes
         val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes * workFactor

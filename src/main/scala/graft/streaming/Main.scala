@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.model.FraudConstants._
@@ -19,6 +20,11 @@ import graft.model.FraudConstants._
   * broker (the Kafka source is lazy until `start()`), so the wiring is
   * exercisable in an environment with no Kafka — the same topologies are
   * driven through MemoryStream in MainSpec.
+  *
+  * Every query starts through [[FraudStream.startPerSlot]], so a fresh
+  * checkpoint gets one state-store partition per task slot; size it with
+  * Spark's own `spark.default.parallelism` (default: the master's core
+  * count). A restarted checkpoint keeps the width it was created with.
   *
   * Usage: sbt "runMain graft.streaming.Main [--variant v1|v2]
   *   [--brokers host:port] [--topic transactions] [--offsets latest|earliest]
@@ -163,12 +169,15 @@ object Main {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
       .appName(s"graft-fraud-${cfg.variant}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    try run(spark, cfg)
+    finally spark.stop()
+  }
+
+  private def run(spark: SparkSession, cfg: Config): Unit = {
     val kafka =
       if (cfg.dryRun) resolveDryRunSource(spark, cfg)
       else source(spark, cfg)
@@ -187,7 +196,6 @@ object Main {
       println("=== v2 dead-letter channel ===")
       p.deadLetter.explain()
       println("DRY_RUN_OK")
-      spark.stop()
       return
     }
 
@@ -195,22 +203,22 @@ object Main {
       if (cfg.checkpointDir.nonEmpty) cfg.checkpointDir
       else java.nio.file.Files.createTempDirectory("graft_main_ckpt").toString
 
-    cfg.variant match {
-      case "v1" =>
-        val out = v1Pipeline(kafka, cfg.effectiveRapidCount)
-        val q =
+    def sinkTo(out: DataFrame, topic: String, dir: String): StreamingQuery =
+      FraudStream.startPerSlot(spark) {
+        val w =
           if (cfg.sink == "kafka")
             out.writeStream.format("kafka")
               .option("kafka.bootstrap.servers", cfg.brokers)
-              .option("topic", cfg.outTopic)
-              .option("checkpointLocation", s"$ckpt/v1")
-              .start()
+              .option("topic", topic)
           else
-            out.writeStream.format("console")
-              .option("truncate", "false")
-              .option("checkpointLocation", s"$ckpt/v1")
-              .start()
-        q.awaitTermination()
+            out.writeStream.format("console").option("truncate", "false")
+        w.option("checkpointLocation", s"$ckpt/$dir").start()
+      }
+
+    cfg.variant match {
+      case "v1" =>
+        sinkTo(v1Pipeline(kafka, cfg.effectiveRapidCount), cfg.outTopic, "v1")
+          .awaitTermination()
 
       case "v2" =>
         val p = v2Pipelines(kafka, cfg.effectiveRapidCount)
@@ -230,23 +238,15 @@ object Main {
               df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
             else df),
           checkpointDir = s"$ckpt/v2")
-        val dlq =
-          if (cfg.sink == "kafka")
-            p.deadLetter.writeStream.format("kafka")
-              .option("kafka.bootstrap.servers", cfg.brokers)
-              .option("topic", cfg.deadLetterTopic)
-              .option("checkpointLocation", s"$ckpt/dlq")
-              .start()
-          else
-            p.deadLetter.writeStream.format("console")
-              .option("truncate", "false")
-              .option("checkpointLocation", s"$ckpt/dlq")
-              .start()
-        spark.streams.awaitAnyTermination()
-        fan.stop(); dlq.stop()
+        // a failed query makes awaitAnyTermination throw; the other one
+        // must still stop before the session does
+        try {
+          val dlq = sinkTo(p.deadLetter, cfg.deadLetterTopic, "dlq")
+          try spark.streams.awaitAnyTermination()
+          finally dlq.stop()
+        } finally fan.stop()
 
       case other => throw new IllegalArgumentException(s"unknown variant: $other")
     }
-    spark.stop()
   }
 }

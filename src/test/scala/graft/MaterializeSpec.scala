@@ -64,4 +64,23 @@ class MaterializeSpec extends AnyFunSuite {
       org.apache.spark.CheckpointDirReset.clear(spark.sparkContext)
     }
   }
+
+  test("a malformed graft.spread.width falls back to the size-derived width instead of throwing") {
+    val df = TestSpark.spark.range(0, 100, 1, 1).toDF()
+    def spreadWidth(prop: Option[String]): Int = {
+      val key = "graft.spread.width"
+      val prior = sys.props.get(key)
+      def put(v: Option[String]): Unit = v match {
+        case Some(w) => sys.props.put(key, w)
+        case None    => sys.props.remove(key)
+      }
+      put(prop)
+      try graft.operators.Materialize.spreadScan(df).rdd.getNumPartitions
+      finally put(prior)
+    }
+    assert(spreadWidth(Some("3")) == 3) // the knob is honoured when well-formed
+    val sizeDerived = spreadWidth(None)
+    for (bad <- Seq("wide", "", "0", "-2", "3.5"))
+      assert(spreadWidth(Some(bad)) == sizeDerived, s"graft.spread.width='$bad'")
+  }
 }
