@@ -228,8 +228,7 @@ object FraudStream {
   }
 
   /** Starts a streaming query whose stateful operators get one state-store
-    * partition per task slot (`sparkContext.defaultParallelism`, which
-    * operators size through Spark's own `spark.default.parallelism`).
+    * partition per task slot, as [[slotWidth]] counts them.
     *
     * Each state-store partition pays a fixed commit and task launch per
     * micro-batch whatever its row count, so on small live batches the
@@ -241,20 +240,51 @@ object FraudStream {
     * checkpoint's offset log; `start()` copies the session conf into the
     * query's own session before it returns. So the key is set only around
     * `start` and restored (or unset) after it, leaving the caller's
-    * session as it was; other threads sharing the session can see the
-    * setting while `start` runs. A restarted checkpoint keeps the width
-    * it recorded.
+    * session as it was. Calls are serialized, so two threads starting
+    * queries on one session cannot take each other's temporary value for
+    * the one to restore; other code that reads or writes the key on a
+    * shared session while `start` runs can still see the temporary value.
+    * A restarted checkpoint keeps the width it recorded.
     */
-  def startPerSlot(spark: SparkSession)(start: => StreamingQuery): StreamingQuery = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.getAll.get(key)
-    spark.conf.set(key, spark.sparkContext.defaultParallelism.toLong)
-    try start
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+  def startPerSlot(spark: SparkSession)(start: => StreamingQuery): StreamingQuery =
+    StartLock.synchronized {
+      val key = "spark.sql.shuffle.partitions"
+      val sc = spark.sparkContext
+      val width = slotWidth(sc.isLocal, sc.getConf.getOption(DefaultParallelismKey),
+        sc.defaultParallelism)
+      val prior = spark.conf.getAll.get(key)
+      spark.conf.set(key, width.toLong)
+      try start
+      finally prior match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
     }
-  }
+
+  private object StartLock
+
+  private val DefaultParallelismKey = "spark.default.parallelism"
+
+  /** The state width [[startPerSlot]] records in a fresh checkpoint:
+    * Spark's own `spark.default.parallelism` when it is set, otherwise the
+    * core count of a local master (`localSlots`). A cluster master without
+    * the setting is refused: its `defaultParallelism` counts only the
+    * executor cores registered so far (at least 2), so a query started
+    * right after the session comes up would record a width set by how
+    * fast executors registered, for the life of its checkpoint.
+    */
+  private[graft] def slotWidth(isLocal: Boolean, setting: Option[String],
+      localSlots: => Int): Int =
+    setting match {
+      case Some(v) =>
+        v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+          s"$DefaultParallelismKey must be a positive integer, got '$v'"))
+      case None if isLocal => localSlots
+      case None => throw new IllegalStateException(
+        s"$DefaultParallelismKey is not set: on a cluster master the streaming state " +
+          "width would depend on how many executors registered before the query " +
+          s"started; set $DefaultParallelismKey to the job's total task slots")
+    }
 
   /** v2 side-output fan-out (P3) as a foreachBatch: one scored stream →
     * main + fraud-alerts (score ≥ 40) + risk-audit projections, each

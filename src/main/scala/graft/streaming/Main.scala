@@ -23,8 +23,12 @@ import graft.model.FraudConstants._
   *
   * Every query starts through [[FraudStream.startPerSlot]], so a fresh
   * checkpoint gets one state-store partition per task slot; size it with
-  * Spark's own `spark.default.parallelism` (default: the master's core
-  * count). A restarted checkpoint keeps the width it was created with.
+  * Spark's own `spark.default.parallelism`. A local master defaults to its
+  * core count; with a cluster `SPARK_MASTER` the key must be set to the
+  * job's total executor cores (a JVM system property,
+  * `-Dspark.default.parallelism=N`, reaches the session's conf), or the
+  * queries refuse to start. A restarted checkpoint keeps the width it was
+  * created with.
   *
   * Usage: sbt "runMain graft.streaming.Main [--variant v1|v2]
   *   [--brokers host:port] [--topic transactions] [--offsets latest|earliest]

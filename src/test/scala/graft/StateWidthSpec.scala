@@ -15,7 +15,9 @@ import graft.streaming.{FraudStream, ScoredEvent}
 
 /** [[FraudStream.fanOut]] creates the detector's state with one state-store
   * partition per task slot, whatever `spark.sql.shuffle.partitions` the
-  * caller's session holds, and hands the session back unchanged. A
+  * caller's session holds, and hands the session back unchanged; the slot
+  * count is `spark.default.parallelism` when set, which a cluster master
+  * must set. A
   * checkpoint created at another width keeps that width on restart, with
   * its card state and without re-emitting committed events.
   */
@@ -61,6 +63,22 @@ class StateWidthSpec extends AnyFunSuite {
   // Spark checks that every state-store partition committed each batch,
   // so a writer must run the whole frame, not skip it
   private def consume(df: DataFrame): Unit = { df.collect(); () }
+
+  test("the state width comes from spark.default.parallelism when set; a cluster master must set it") {
+    def unused: Int = fail("the local core count must not be read when the key is set")
+    assert(FraudStream.slotWidth(isLocal = false, Some("6"), unused) == 6)
+    assert(FraudStream.slotWidth(isLocal = true, Some(" 5 "), unused) == 5)
+    assert(FraudStream.slotWidth(isLocal = true, None, 4) == 4)
+    val unset = intercept[IllegalStateException](
+      FraudStream.slotWidth(isLocal = false, None, 2))
+    assert(unset.getMessage.contains("spark.default.parallelism is not set"))
+    for (bad <- Seq("x", "0", "-3"))
+      intercept[IllegalArgumentException](FraudStream.slotWidth(isLocal = false, Some(bad), 2))
+    // the running session is local without the key: its core count
+    val sc = spark.sparkContext
+    assert(FraudStream.slotWidth(sc.isLocal, sc.getConf.getOption("spark.default.parallelism"),
+      sc.defaultParallelism) == sc.defaultParallelism)
+  }
 
   test("fanOut sizes fresh state to the task slots and leaves the session's width as it was") {
     import spark.implicits._
